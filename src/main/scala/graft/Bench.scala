@@ -202,15 +202,7 @@ object Bench {
     }
     val floorJson =
       s""","floor_sec":${"%.4f".format(floorSec)},"jobs":${jmap(jobsPerQuery.toSeq.sortBy(_._1))},"floor_adj":${jmap(floorAdj.map { case (k, v) => k -> (math.rint(v * 1000) / 1000) })}"""
-    val memoStats = graft.queries.DedupQueries.pairsMemoStats +
-      ",tf=" + graft.queries.TextQueries.tfMemoStats +
-      ",bpe=" + graft.queries.TextQueries.bpeMemoStats +
-      ",bg=" + graft.queries.TextQueries.bgMemoStats +
-      ",clf=" + graft.queries.TextQueries.clfMemoStats +
-      ",dsir=" + graft.queries.SamplingQueries.dsirMemoStats +
-      ",ann=" + graft.queries.SimilarityQueries.annMemoStats +
-      ",mm=" + graft.queries.MultimodalQueries.mmMemoStats +
-      ",ge=" + graft.queries.GraphQueries.graphMemoStats
+    val memoStats = graft.queries.StateMemo.summary()
     val json = s"""{"metric":"total","value":$total,"unit":"sec","reps":$reps$ratioJson$floorJson,"pairs_memo":"$memoStats","queries":$qs,"spread":$spread,"qmin":$qmin,"sf":"$sfDir"}"""
     // persist the FULL-precision JSON (all queries + spreads) so a
     // truncated log tail can't lose the official numbers (round 2's BENCH

@@ -129,17 +129,28 @@ object StageStore {
     * is the standard make/rsync staleness test: it never misses a rewrite
     * that changes either, and a byte-identical rewrite that refreshes
     * mtimes merely recomputes (safe direction). Cost: one namenode listing
-    * of the input dir — metadata only, no data read; goes through the
-    * Hadoop FS API so it prices the same on HDFS/S3A as on local disk.
+    * of the input dir — metadata only, no data read. A local dir is
+    * walked with the JDK, following symlinks so an aliased dir
+    * fingerprints its target's files: Hadoop's local listing forks a
+    * `stat` per file (~37 ms for a 10-file dir), and the query memos
+    * ([[graft.queries.StateMemo]]) fingerprint their dir on every call.
     */
   def contentFingerprint(spark: SparkSession, dir: String): String = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val s = it.next()
-      entries += s"${s.getPath.toUri.getPath}|${s.getLen}|${s.getModificationTime}"
+    if (fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem]) {
+      val walk = Files.walk(Paths.get(fs.makeQualified(path).toUri),
+        java.nio.file.FileVisitOption.FOLLOW_LINKS)
+      try walk.filter(Files.isRegularFile(_)).forEach { p =>
+        entries += s"${p.toUri.getPath}|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"
+      } finally walk.close()
+    } else {
+      val it = fs.listFiles(path, true)
+      while (it.hasNext) {
+        val s = it.next()
+        entries += s"${s.getPath.toUri.getPath}|${s.getLen}|${s.getModificationTime}"
+      }
     }
     md5hex("graft-content-fp|" + entries.sorted.mkString("\n"))
   }

@@ -90,24 +90,15 @@ object GraphQueries {
     * this frame IS [[domainEdges]] row-for-row — which lets the
     * communities/triangles consumers share the one memo.
     */
-  private val edgeFrameCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val edgeMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val edgeMemoMisses = new java.util.concurrent.atomic.AtomicLong
   def graphMemoStats: String =
-    s"${edgeMemoHits.get}/${edgeMemoMisses.get}," +
-      s"gn=${nodeMemoHits.get}/${nodeMemoMisses.get}"
+    StateMemo.stats("edges") + "," + StateMemo.summary("nodes", "edgeState")
 
-  private def edgesOutw(s: SparkSession, d: String): DataFrame = {
-    def build(): DataFrame = {
+  private def edgesOutw(s: SparkSession, d: String): DataFrame =
+    StateMemo.shared("edges", s, d) {
       val ec = domainEdges(s, d)
       graft.operators.Materialize.shared(
         ec.join(ec.groupBy("src").agg(sum("w").as("outw")), "src"), col("src"))
     }
-    if (!DedupQueries.share(s)) build()
-    else DedupQueries.memo(edgeFrameCache, (s, d), () => build(),
-      edgeMemoHits, edgeMemoMisses)
-  }
 
   /** The distinct source-node frame and its count — consumed by all four
     * graph queries (rank's isolated-node attach + the n literal,
@@ -116,23 +107,12 @@ object GraphQueries {
     * (the sanctioned class), paid once per (session, dir) instead of per
     * rep. Verify recomputes per query.
     */
-  private val nodeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, java.lang.Long)]()
-  private val nodeMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val nodeMemoMisses = new java.util.concurrent.atomic.AtomicLong
-
-  private def nodesAndCount(s: SparkSession, d: String): (DataFrame, Long) = {
-    def build(): (DataFrame, java.lang.Long) = {
+  private def nodesAndCount(s: SparkSession, d: String): (DataFrame, Long) =
+    StateMemo.shared("nodes", s, d) {
       val nodes = graft.operators.Materialize.frame(
         Tables.documents(s, d).select(col("source").as("node")).distinct())
       (nodes, nodes.count())
     }
-    val (nodes, n) =
-      if (!DedupQueries.share(s)) build()
-      else DedupQueries.memo(nodeCache, (s, d), () => build(),
-        nodeMemoHits, nodeMemoMisses)
-    (nodes, n.longValue())
-  }
 
   /** The damped-superstep tail shared by [[domainRank]] (recomputed edges)
     * and [[domainRankStored]] (persisted edge state): rank [[Iters]]
@@ -230,11 +210,8 @@ object GraphQueries {
     * (src, dst) re-aggregation's and the superstep join's clustering, so
     * the standing state never shuffles (PlanAuditSpec pins it).
     */
-  private val edgeStateCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private[graft] def edgeState(s: SparkSession, d: String): String =
-    edgeStateCache.computeIfAbsent((s, d), _ => {
+    StateMemo("edgeState", s, d) {
       val tbl = graft.operators.AggState.name("graft_graphedges", d).parts
       val docsrc = Tables.documents(s, d).select(col("doc_id"), col("source"))
       def weights(pairs: DataFrame): DataFrame = {
@@ -255,7 +232,7 @@ object GraphQueries {
         .write.mode("append").format("parquet")
         .bucketBy(4, "src").sortBy("src").saveAsTable(tbl)
       tbl
-    })
+    }
 
   /** [[domainRank]] from the PERSISTED edge state ([[edgeState]]): summing
     * the per-epoch partials reproduces the recomputed edge relation
@@ -294,7 +271,7 @@ object GraphQueries {
     * [[edgesOutw]]) and rebuilt from scratch on the Verify path.
     */
   private def baseEdges(s: SparkSession, d: String): DataFrame =
-    if (DedupQueries.share(s)) edgesOutw(s, d).select("src", "dst", "w")
+    if (StateMemo.sharing(s)) edgesOutw(s, d).select("src", "dst", "w")
     else domainEdges(s, d)
 
   /** The node universe for communities/triangles: the shared memo frame
@@ -302,7 +279,7 @@ object GraphQueries {
     * (no checkpoint, no count — those queries never need n).
     */
   private def nodeUniverse(s: SparkSession, d: String): DataFrame =
-    if (DedupQueries.share(s)) nodesAndCount(s, d)._1
+    if (StateMemo.sharing(s)) nodesAndCount(s, d)._1
     else Tables.documents(s, d).select(col("source").as("node")).distinct()
 
   def domainCommunities(s: SparkSession, d: String): DataFrame = {

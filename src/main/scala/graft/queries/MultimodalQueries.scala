@@ -76,6 +76,14 @@ object MultimodalQueries {
       .select(col("a").as("media_a"), col("b").as("media_b"), col("hamming"))
       .orderBy("media_a", "media_b")
 
+  /** Bench-artifact marker (same contract as DedupQueries.pairsMemoStats). */
+  def mmMemoStats: String = StateMemo.stats("mm", "mmState")
+
+  private def hashBuild(s: SparkSession, d: String): DataFrame =
+    Multimodal.ahash(Multimodal.mediaFromText(
+        Tables.documents(s, d), "doc_id", "text", "image", "documents"), 60)
+      .filter(col("n_bytes") > 0)
+
   /** The 60-bit aHash fingerprint frame `(media_id, ahash, n_bytes)` every
     * query in the phash dedup family reads — one byte-level decode pass
     * over the media table, checkpointed because hashes feed multiple
@@ -85,25 +93,8 @@ object MultimodalQueries {
     * table a rolling media deployment keeps; Verify leaves the flag off so
     * the correctness gate always decodes from scratch.
     */
-  private val hashCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val mmMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val mmMemoMisses = new java.util.concurrent.atomic.AtomicLong
-
-  /** Bench-artifact marker (same contract as DedupQueries.pairsMemoStats). */
-  def mmMemoStats: String = s"${mmMemoHits.get}/${mmMemoMisses.get}"
-
-  private def hashBuild(s: SparkSession, d: String): DataFrame =
-    Multimodal.ahash(Multimodal.mediaFromText(
-        Tables.documents(s, d), "doc_id", "text", "image", "documents"), 60)
-      .filter(col("n_bytes") > 0)
-
-  private def phashFrame(s: SparkSession, d: String): DataFrame = {
-    def build(): DataFrame = hashBuild(s, d).localCheckpoint(true)
-    if (!DedupQueries.share(s)) build()
-    else DedupQueries.memo(hashCache, (s, d), () => build(),
-                           mmMemoHits, mmMemoMisses)
-  }
+  private def phashFrame(s: SparkSession, d: String): DataFrame =
+    StateMemo.shared("mm", s, d)(hashBuild(s, d).localCheckpoint(true))
 
   /** mm_phash_clusters — connected components over [[phashPairs]]'s edge
     * set: the multimodal member of the cluster family, the exact
@@ -155,11 +146,8 @@ object MultimodalQueries {
     * every stored state here; an ingest epoch would bucket-aligned-APPEND
     * its batch rows (DedupState.merge's shape) rather than rewrite.
     */
-  private val stateCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
   private[queries] def mmState(s: SparkSession, d: String): String =
-    stateCache.computeIfAbsent((s, d), _ => {
+    StateMemo("mmState", s, d) {
       val tbl = graft.operators.DedupState.names("graft_mm", d).bands
       val standing = hashBuild(s, d)
         .filter(col("media_id") < DedupQueries.splitId(s, d))
@@ -168,7 +156,7 @@ object MultimodalQueries {
           standing, "media_id", "ahash", bits = 60, nBands = 4),
         "band_key", tbl, 4)
       tbl
-    })
+    }
 
   /** Epoch-advance the stored media band state: bucket-aligned APPEND of
     * one batch's fingerprint band rows — the media sibling of

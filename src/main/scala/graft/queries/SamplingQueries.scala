@@ -179,8 +179,13 @@ object SamplingQueries {
   private def dsirFeatures(docs: DataFrame): DataFrame =
     dsirFeaturesRaw(docs).localCheckpoint(true)
 
-  /** Full-corpus [[dsirFeatures]] frame, memoized under the bench's
-    * cross-query memo flag (the DedupQueries.tokFrame contract): the
+  /** Bench-artifact marker (the DedupQueries.pairsMemoStats contract). */
+  def dsirMemoStats: String = StateMemo.stats("dsir", "dsirState")
+
+  /** [[dsirFeatures]] of `documents` restricted to `pred`: a per-query
+    * build with the flag off, and with it on a filter over the full-corpus
+    * frame, memoized under the bench's cross-query memo flag (the
+    * DedupQueries.tokFrame contract): the
     * tokenize + per-token md5 + (doc, bucket) aggregation is the dominant
     * shared cost of `sample_dsir`, `sample_dsir_stored` and the stored-λ
     * build, and featurization is strictly per-document, so deriving the
@@ -190,24 +195,9 @@ object SamplingQueries {
     * relation. Verify leaves the flag off, so the correctness gate
     * featurizes from scratch per query.
     */
-  private val dsirFeatCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val dsirMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val dsirMemoMisses = new java.util.concurrent.atomic.AtomicLong
-
-  /** Bench-artifact marker (the DedupQueries.pairsMemoStats contract). */
-  def dsirMemoStats: String = s"${dsirMemoHits.get}/${dsirMemoMisses.get}"
-
-  private def share(s: SparkSession): Boolean =
-    s.conf.get("spark.graft.dedup.sharePairs", "false").toBoolean
-
-  /** [[dsirFeatures]] of `documents` restricted to `pred` — per-query
-    * build with the flag off, a filter over the shared corpus frame with
-    * it on.
-    */
   private def dsirFeaturesFor(s: SparkSession, d: String,
                               pred: Option[Column]): DataFrame =
-    if (!share(s))
+    if (!StateMemo.sharing(s))
       dsirFeatures(pred.foldLeft(Tables.documents(s, d))(_.filter(_)))
     else {
       // Materialize.shared, not a bare checkpoint: AQE coalesces the tiny
@@ -215,10 +205,8 @@ object SamplingQueries {
       // checkpoint FREEZES that layout for every consumer — the r12 memo
       // lesson, applied here in r13 (Profile: 0.6 s single-task λ/score
       // stages inside sample_dsir on a 32-core session)
-      val full = DedupQueries.memo(dsirFeatCache, (s, d),
-        () => graft.operators.Materialize.shared(
-          dsirFeaturesRaw(Tables.documents(s, d)), col("doc_id")),
-        dsirMemoHits, dsirMemoMisses)
+      val full = StateMemo.shared("dsir", s, d)(graft.operators.Materialize.shared(
+        dsirFeaturesRaw(Tables.documents(s, d)), col("doc_id")))
       pred.foldLeft(full)(_.filter(_))
     }
 
@@ -270,20 +258,15 @@ object SamplingQueries {
     * (doc_id < the shared 4/5 boundary) persisted as a catalog table —
     * built once per (session, dir), then only read.
     */
-  private val dsirStateCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
-  private[graft] def dsirState(s: SparkSession, d: String): String = {
-    if (dsirStateCache.size > 3) dsirStateCache.clear()
-    dsirStateCache.computeIfAbsent((s, d), _ => {
+  private[graft] def dsirState(s: SparkSession, d: String): String =
+    StateMemo("dsirState", s, d) {
       val tbl = graft.operators.AggState.name("graft_dsirlam", d).parts
       val corpusFeats = dsirFeaturesFor(s, d,
         Some(col("doc_id") < DedupQueries.splitId(s, d)))
       graft.operators.Layout.writeBucketed(
         dsirLam(s, corpusFeats), "bucket", tbl, 4)
       tbl
-    })
-  }
+    }
 
   /** Incoming-batch DSIR selection against the STORED λ model
     * ([[dsirState]]) — the data-selection sibling of the stored

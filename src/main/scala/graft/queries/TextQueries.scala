@@ -25,27 +25,18 @@ object TextQueries {
     * build. Checkpointed on BOTH paths: every consumer reads the frame at
     * least twice (corpus statistics + per-doc score join).
     */
-  private val tfFrameCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val tfMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val tfMemoMisses = new java.util.concurrent.atomic.AtomicLong
-
-  /** Bench-artifact marker (same contract as DedupQueries.pairsMemoStats). */
-  def tfMemoStats: String = s"${tfMemoHits.get}/${tfMemoMisses.get}"
-
   private[queries] def tfFrame(s: SparkSession, d: String): DataFrame = {
     def build(): DataFrame =
       TextAnalysis.tokenRows(Tables.documents(s, d), "doc_id", "text")
         .groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(true)
-    if (!DedupQueries.share(s)) build()
-    else DedupQueries.memo(tfFrameCache, (s, d),
-      () => graft.operators.Materialize.shared(
-        TextAnalysis.tokenRows(Tables.documents(s, d), "doc_id", "text")
-          .groupBy("doc_id", "token").agg(count(lit(1)).as("tf")),
-        col("doc_id")),
-      tfMemoHits, tfMemoMisses)
+    if (!StateMemo.sharing(s)) build().localCheckpoint(true)
+    else StateMemo.shared("tf", s, d)(
+      graft.operators.Materialize.shared(build(), col("doc_id")))
   }
+
+  /** Bench-artifact marker (same contract as DedupQueries.pairsMemoStats). */
+  def tfMemoStats: String =
+    StateMemo.stats("tf", "tfDl", "bm25Stats", "bm25Idf", "bm25State", "bm25Adv")
 
   /** [[tfFrame]] with the per-doc length `dl` folded in at posting grain —
     * the exact stored-postings shape [[bm25State]] persists (token, doc_id,
@@ -53,16 +44,12 @@ object TextQueries {
     * (session, dir) instead of once per BM25 rep; the from-scratch path
     * computes the identical window inline (rows bit-identical either way).
     */
-  private val tfDlFrameCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
   private def tfDlFrame(s: SparkSession, d: String): DataFrame = {
     def withDl(tf: DataFrame): DataFrame = tf.withColumn("dl",
       sum("tf").over(org.apache.spark.sql.expressions.Window.partitionBy("doc_id")))
-    if (!DedupQueries.share(s)) withDl(tfFrame(s, d))
-    else DedupQueries.memo(tfDlFrameCache, (s, d),
-      () => graft.operators.Materialize.shared(withDl(tfFrame(s, d)), col("token")),
-      tfMemoHits, tfMemoMisses)
+    if (!StateMemo.sharing(s)) withDl(tfFrame(s, d))
+    else StateMemo.shared("tfDl", s, d)(
+      graft.operators.Materialize.shared(withDl(tfFrame(s, d)), col("token")))
   }
 
   /** Full-corpus BM25 scalar stats (T = total tf, maxtf, N = doc count) —
@@ -71,17 +58,11 @@ object TextQueries {
     * driver reads are paid once per (session, dir) instead of twice per
     * rep (r13). Verify recomputes per query as always.
     */
-  private val bm25StatsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Long, Long, Long)]()
-
-  private def bm25CorpusStats(s: SparkSession, d: String): (Long, Long, Long) = {
-    def build(): (Long, Long, Long) = {
+  private def bm25CorpusStats(s: SparkSession, d: String): (Long, Long, Long) =
+    StateMemo.shared("bm25Stats", s, d) {
       val st = tfFrame(s, d).agg(sum("tf").as("t"), max("tf").as("mtf")).head()
       (st.getLong(0), st.getLong(1), Tables.documents(s, d).count())
     }
-    if (!DedupQueries.share(s)) build()
-    else DedupQueries.memo(bm25StatsCache, (s, d), () => build())
-  }
 
   /** Full-corpus `(token, idf_micro)` relation for the from-scratch BM25 —
     * the token-statistics table [[bm25State]] persists (tTbl), on the
@@ -91,9 +72,6 @@ object TextQueries {
     * hash-distributed on the probe join key `token`. Verify recomputes
     * per query.
     */
-  private val bm25IdfCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
   private def idfOf(tf: DataFrame, bigN: Long): DataFrame =
     tf.groupBy("token").agg(count(lit(1)).as("df"))
       .withColumn("idf_micro",
@@ -102,10 +80,8 @@ object TextQueries {
       .select("token", "idf_micro")
 
   private def bm25Idf(s: SparkSession, d: String): DataFrame =
-    DedupQueries.memo(bm25IdfCache, (s, d),
-      () => graft.operators.Materialize.shared(
-        idfOf(tfFrame(s, d), bm25CorpusStats(s, d)._3), col("token")),
-      tfMemoHits, tfMemoMisses)
+    StateMemo.shared("bm25Idf", s, d)(graft.operators.Materialize.shared(
+      idfOf(tfFrame(s, d), bm25CorpusStats(s, d)._3), col("token")))
 
   /** C12a — top-20 tokens by frequency (explode + agg + top-k). */
   def c12Tokens(s: SparkSession, d: String): DataFrame =
@@ -532,7 +508,7 @@ object TextQueries {
     val tf = tfDlFrame(s, d)
     val (bigT, maxTf, bigN) = bm25CorpusStats(s, d)
     val idf =
-      if (DedupQueries.share(s)) bm25Idf(s, d) else idfOf(tf0, bigN)
+      if (StateMemo.sharing(s)) bm25Idf(s, d) else idfOf(tf0, bigN)
     // idf rides the PROBE-sized query side, not the 7M-row joined stream
     val q = tf0.filter(col("doc_id") % 100 === 0)
       .select(col("doc_id").as("query_doc"), col("token"))
@@ -583,12 +559,8 @@ object TextQueries {
     * the frozen constants survive a session restart. Built once per
     * (session, dir) like every stored index here.
     */
-  private val bm25StateCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String, String)]()
-
-  private[graft] def bm25State(s: SparkSession, d: String): (String, String, String) = {
-    if (bm25StateCache.size > 3) bm25StateCache.clear()
-    bm25StateCache.computeIfAbsent((s, d), _ => {
+  private[graft] def bm25State(s: SparkSession, d: String): (String, String, String) =
+    StateMemo("bm25State", s, d) {
       val pTbl = graft.operators.AggState.name("graft_bm25p", d).parts
       val tTbl = graft.operators.AggState.name("graft_bm25t", d).parts
       val sTbl = graft.operators.AggState.name("graft_bm25s", d).parts
@@ -612,8 +584,7 @@ object TextQueries {
       s.createDataFrame(Seq((bigT, bigN, maxTf))).toDF("t", "n", "maxtf")
         .write.mode("overwrite").saveAsTable(sTbl)
       (pTbl, tTbl, sTbl)
-    })
-  }
+    }
 
   /** BM25 retrieval against the FROZEN index ([[bm25State]]) — the
     * rolling-ingest contract applied to search: each incoming batch doc
@@ -669,8 +640,6 @@ object TextQueries {
     * row-identical to [[bm25Stored]] and the oracle IS the stored query's
     * SQL: the merge ≡ rebuild proof runs cross-engine on every hash gate.
     */
-  private val bm25AdvCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (String, String, String)]()
 
   private def bm25Partials(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val tf = TextAnalysis.tokenRows(docs, "doc_id", "text")
@@ -688,9 +657,8 @@ object TextQueries {
     (postings, toks, stats)
   }
 
-  private[graft] def bm25AdvState(s: SparkSession, d: String): (String, String, String) = {
-    if (bm25AdvCache.size > 3) bm25AdvCache.clear()
-    bm25AdvCache.computeIfAbsent((s, d), _ => {
+  private[graft] def bm25AdvState(s: SparkSession, d: String): (String, String, String) =
+    StateMemo("bm25Adv", s, d) {
       val pTbl = graft.operators.AggState.name("graft_bm25pa", d).parts
       val tTbl = graft.operators.AggState.name("graft_bm25ta", d).parts
       val sTbl = graft.operators.AggState.name("graft_bm25sa", d).parts
@@ -711,8 +679,7 @@ object TextQueries {
         .bucketBy(4, "token").sortBy("token").saveAsTable(tTbl)
       s1.write.mode("append").format("parquet").saveAsTable(sTbl)
       (pTbl, tTbl, sTbl)
-    })
-  }
+    }
 
   /** text_bm25_advance — [[bm25Stored]]'s probe against the epoch-ADVANCED
     * partial index ([[bm25AdvState]]): fold the stat rows (sum/sum/max),
@@ -813,11 +780,7 @@ object TextQueries {
     * the per-rep corpus re-tokenize + three corpus-sized aggregations were
     * 7 of the query's 12 jobs and ~1.1 s of its 1.47 s.
     */
-  private val bigramLmCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private val bgMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val bgMemoMisses = new java.util.concurrent.atomic.AtomicLong
-  def bgMemoStats: String = s"${bgMemoHits.get}/${bgMemoMisses.get}"
+  def bgMemoStats: String = StateMemo.stats("bg")
 
   private def bigramLm(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     def build(share: Boolean): (DataFrame, DataFrame) = {
@@ -851,9 +814,8 @@ object TextQueries {
         else lp0
       (tf, lp)
     }
-    if (!DedupQueries.share(s)) build(share = false)
-    else DedupQueries.memo(bigramLmCache, (s, d), () => build(share = true),
-      bgMemoHits, bgMemoMisses)
+    if (!StateMemo.sharing(s)) build(share = false)
+    else StateMemo.shared("bg", s, d)(build(share = true))
   }
 
   def bigramLogprob(s: SparkSession, d: String): DataFrame = {
@@ -923,6 +885,13 @@ object TextQueries {
       .orderBy("step")
   }
 
+  /** Bench-artifact marker (same contract as DedupQueries.pairsMemoStats):
+    * a near-zero `text_bpe_merges` median means the memoized training ran
+    * once under the flag — the hit/miss counts make that attributable
+    * instead of suspicious.
+    */
+  def bpeMemoStats: String = StateMemo.stats("bpe")
+
   /** The BPE training loop shared by [[bpeMerges]] (emits the merge rows)
     * and [[bpeEncode]] (applies the learned segmentation): returns the
     * merge rows and the POST-merge symbol relation `(token, tf, pos, sym)`
@@ -931,25 +900,9 @@ object TextQueries {
     * leaves the flag off so both oracle-checked queries train from
     * scratch.
     */
-  private val trainCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (Seq[(Long, String, String, Long, Long)], DataFrame)]()
-  private val bpeMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val bpeMemoMisses = new java.util.concurrent.atomic.AtomicLong
-
-  /** Bench-artifact marker (same contract as DedupQueries.pairsMemoStats):
-    * a near-zero `text_bpe_merges` median means the memoized training ran
-    * once under the flag — the hit/miss counts make that attributable
-    * instead of suspicious.
-    */
-  def bpeMemoStats: String = s"${bpeMemoHits.get}/${bpeMemoMisses.get}"
-
   private def bpeTrain(s: SparkSession, d: String):
-      (Seq[(Long, String, String, Long, Long)], DataFrame) = {
-    if (!s.conf.get("spark.graft.dedup.sharePairs", "false").toBoolean)
-      bpeTrainBuild(s, d)
-    else DedupQueries.memo(trainCache, (s, d), () => bpeTrainBuild(s, d),
-                           bpeMemoHits, bpeMemoMisses)
-  }
+      (Seq[(Long, String, String, Long, Long)], DataFrame) =
+    StateMemo.shared("bpe", s, d)(bpeTrainBuild(s, d))
 
   private def bpeTrainBuild(s: SparkSession, d: String):
       (Seq[(Long, String, String, Long, Long)], DataFrame) = {
@@ -1112,22 +1065,14 @@ object TextQueries {
     * per-query rebuild — ScaleOpsSpec parity rows pin it). Verify leaves
     * the flag off, so the correctness gate always trains from scratch.
     */
-  private val clfModelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), (DataFrame, DataFrame)]()
-  private val clfMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val clfMemoMisses = new java.util.concurrent.atomic.AtomicLong
-  def clfMemoStats: String = s"${clfMemoHits.get}/${clfMemoMisses.get}," +
-    s"sc=${scoredMemoHits.get}/${scoredMemoMisses.get}"
+  def clfMemoStats: String =
+    StateMemo.stats("clf", "clfBatch") + "," + StateMemo.summary("clfScored", "clfState")
 
-  private def clfModel(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    def build(): (DataFrame, DataFrame) = {
+  private def clfModel(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    StateMemo.shared("clf", s, d) {
       val db = clfFeatures(s, d)
       (db, Classifier.trainLogreg(db, ClfBuckets, ClfRounds))
     }
-    if (!s.conf.get("spark.graft.dedup.sharePairs", "false").toBoolean) build()
-    else DedupQueries.memo(clfModelCache, (s, d), () => build(),
-                           clfMemoHits, clfMemoMisses)
-  }
 
   def qualityClassifier(s: SparkSession, d: String): DataFrame = {
     val (db, w) = clfModel(s, d)
@@ -1146,20 +1091,15 @@ object TextQueries {
     * bit-identical to the per-query build). Verify leaves the flag off,
     * so the correctness gate always featurizes+scores from scratch.
     */
-  private val corpusScoredCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-  private val scoredMemoHits = new java.util.concurrent.atomic.AtomicLong
-  private val scoredMemoMisses = new java.util.concurrent.atomic.AtomicLong
-
   private def corpusScored(s: SparkSession, d: String): DataFrame =
-    DedupQueries.memo(corpusScoredCache, (s, d), () => {
+    StateMemo.shared("clfScored", s, d) {
       val (db, w) = clfModel(s, d)
       val meta = DedupQueries.tokFrame(s, d).select(col("doc_id"), col("lang"),
         size(col("toks")).cast("long").as("n_toks"))
       graft.operators.Materialize.shared(
         Classifier.score(db, w).select("doc_id", "score_nano")
           .join(meta, "doc_id"), col("doc_id"))
-    }, scoredMemoHits, scoredMemoMisses)
+    }
 
   private[graft] val TierRates = Seq(1 -> 0.05, 2 -> 0.20, 3 -> 0.50, 4 -> 1.00)
 
@@ -1180,7 +1120,7 @@ object TextQueries {
     */
   def qualityTiers(s: SparkSession, d: String): DataFrame = {
     val scored =
-      if (DedupQueries.share(s)) corpusScored(s, d).select("doc_id", "score_nano")
+      if (StateMemo.sharing(s)) corpusScored(s, d).select("doc_id", "score_nano")
       else {
         val (db, w) = clfModel(s, d)
         Classifier.score(db, w)
@@ -1225,7 +1165,7 @@ object TextQueries {
     */
   def tokenBudget(s: SparkSession, d: String): DataFrame = {
     val scored =
-      if (DedupQueries.share(s)) corpusScored(s, d)
+      if (StateMemo.sharing(s)) corpusScored(s, d)
       else {
         val (db, w) = clfModel(s, d)
         val meta = Tables.documents(s, d).select(col("doc_id"), col("lang"),
@@ -1257,20 +1197,15 @@ object TextQueries {
     * rolling-ingest contract (train on the curated corpus, freeze,
     * score every incoming batch against the frozen weights).
     */
-  private val clfStateCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
-  private[graft] def clfState(s: SparkSession, d: String): String = {
-    if (clfStateCache.size > 3) clfStateCache.clear()
-    clfStateCache.computeIfAbsent((s, d), _ => {
+  private[graft] def clfState(s: SparkSession, d: String): String =
+    StateMemo("clfState", s, d) {
       val tbl = graft.operators.AggState.name("graft_clfw", d).parts
       val corpus = Tables.documents(s, d)
         .filter(col("doc_id") < DedupQueries.splitId(s, d))
       val w = Classifier.trainLogreg(clfFeaturesOf(corpus), ClfBuckets, ClfRounds)
       graft.operators.Layout.writeBucketed(w, "bucket", tbl, 4)
       tbl
-    })
-  }
+    }
 
   /** Incoming-batch scoring against the STORED frozen weights
     * ([[clfState]]) — the classifier sibling of
@@ -1294,8 +1229,6 @@ object TextQueries {
     * arithmetic — rows bit-identical either way). r13, guide §2.4: the
     * twin featurize+score chains were ~5 jobs per rep per query.
     */
-  private val clfScoredBatchCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
 
   private def clfScoredBatch(s: SparkSession, d: String): DataFrame = {
     def build(): DataFrame = {
@@ -1304,10 +1237,9 @@ object TextQueries {
         .filter(col("doc_id") >= DedupQueries.splitId(s, d))
       Classifier.score(clfFeaturesOf(batch, checkpoint = false), s.table(tbl))
     }
-    if (!DedupQueries.share(s)) build()
-    else DedupQueries.memo(clfScoredBatchCache, (s, d),
-      () => graft.operators.Materialize.shared(build(), col("doc_id")),
-      clfMemoHits, clfMemoMisses)
+    if (!StateMemo.sharing(s)) build()
+    else StateMemo.shared("clfBatch", s, d)(
+      graft.operators.Materialize.shared(build(), col("doc_id")))
   }
 
   /** Classifier EVALUATION against held-out labels — the step an operator
@@ -1331,7 +1263,7 @@ object TextQueries {
     // the shared scored batch is already materialized under the memo; the
     // from-scratch path keeps its own checkpoint (three consumers below)
     val scored =
-      if (DedupQueries.share(s)) clfScoredBatch(s, d)
+      if (StateMemo.sharing(s)) clfScoredBatch(s, d)
       else clfScoredBatch(s, d).localCheckpoint(true)
     val (n, cuts, _) = graft.operators.OrderStats.selectRanksOf(
       scored.select(col("score_nano").as("v")),

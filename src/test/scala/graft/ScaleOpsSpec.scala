@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Skew
+import graft.queries.StateMemo
 import org.apache.spark.sql.functions._
 
 
@@ -280,12 +281,11 @@ class ScaleOpsSpec extends SparkSpec {
   }
 
   test("sharePairs flag yields bit-identical results for every share-enabled query") {
-    // EVERY query the bench-only memo family reroutes (tokFrame /
-    // shingleFrame / corpusShingleMasks / simhashFrame / winCache /
-    // bpeTrain / cdcFrame / dsirFeatures / bucketedVecs / minhash
-    // pairs+bands) must produce the same rows flag-on and flag-off — the
-    // bench path of a memoized query is otherwise never correctness-
-    // checked, because Verify runs with the flag off.
+    // EVERY query the bench-only memo family reroutes must produce the
+    // same rows flag-on and flag-off — the bench path of a memoized query
+    // is otherwise never correctness-checked, because Verify runs with the
+    // flag off. Coverage comes from the registry: every `StateMemo.shared`
+    // memo in queries/ must be built by the flag-on pass below.
     val qs = Seq(
       "dedup_minhash_pairs", "dedup_clusters", "dedup_minhash_sigs",
       "dedup_incremental", "dedup_decontam_fuzzy", "dedup_decontam_purge",
@@ -306,14 +306,32 @@ class ScaleOpsSpec extends SparkSpec {
       // the round-9 multimodal phash family (shared aHash frame memo)
       "mm_phash_pairs", "mm_phash_clusters", "mm_phash_incremental",
       "mm_phash_stored",
-      // round-9 stored graph maintenance (batch bands memo feeds the
-      // edge-state advance)
-      "graph_domain_rank_stored")
+      // stored graph maintenance (batch bands memo feeds the edge-state
+      // advance)
+      "graph_domain_rank_stored",
+      // the r13 memos the list above does not reach
+      "sim_pq_ann", "text_bigram_logprob", "text_clf_stored",
+      "dedup_clusters_stored", "dedup_clusters_incremental",
+      "dedup_incremental_stored", "graph_domain_rank")
+    val src = new java.io.File("src/main/scala/graft/queries")
+    assert(src.isDirectory, s"tests run from the repo root; no $src")
+    val sharedMemos = src.listFiles.toSeq.filter(_.getName.endsWith(".scala"))
+      .flatMap { f =>
+        val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        """StateMemo\.shared\("(\w+)"""".r.findAllMatchIn(text).map(_.group(1))
+      }.distinct
+    assert(sharedMemos.size >= 20, s"found only ${sharedMemos.mkString(",")} in $src")
     def run(q: String) = SparkEntry.queries(q)(spark, sf())
       .collect().map(_.toSeq).sortBy(_.mkString("|"))
     val off = qs.map(q => q -> run(q)).toMap
     spark.conf.set("spark.graft.dedup.sharePairs", "true")
+    // start the flag-on pass from an empty registry, as the bench does: the
+    // stored states are rebuilt under the flag too
+    StateMemo.clear()
+    val built0 = sharedMemos.map(n => n -> StateMemo.counts(n)._2).toMap
     try qs.foreach { q => assert(run(q) === off(q), s"sharePairs changed $q") }
     finally spark.conf.unset("spark.graft.dedup.sharePairs")
+    val unbuilt = sharedMemos.filter(n => StateMemo.counts(n)._2 == built0(n))
+    assert(unbuilt.isEmpty, s"the flag-on pass never built ${unbuilt.mkString(",")}")
   }
 }
